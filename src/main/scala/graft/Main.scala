@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** spark-submit entrypoint — the engine's CLI, mirroring the reference
   * driver's command surface (main.py / convert_to_embeddings.py) so a
@@ -60,16 +61,15 @@ object Main {
         val jaccard = rest.lift(1).map(_.toDouble).getOrElse(0.8)
         val r = jobs.PipelineJob.run(spark,
           spark.read.parquet(pages).as[PageRow], root, nBuckets, jaccard)
-        println(s"""{"command":"pipeline","extract_version":${r.extractVersion},""" +
-          s""""index_root":"${lake.LakeTable.esc(r.indexRoot)}","dedup_dropped":${r.dedupDropped},""" +
-          s""""resumed":${r.resumed}}""")
+        println(Json.obj("command" -> "pipeline", "extract_version" -> r.extractVersion,
+          "index_root" -> r.indexRoot, "dedup_dropped" -> r.dedupDropped, "resumed" -> r.resumed))
 
       case "extract" :: pages :: tableRoot :: rest =>
         val nBuckets = rest.headOption.map(_.toInt).getOrElse(64)
         val r = jobs.ExtractJob.run(spark,
           spark.read.parquet(pages).as[PageRow], tableRoot, nBuckets)
-        println(s"""{"command":"extract","version":${r.version},"docs":${r.docs},""" +
-          s""""chunks":${r.chunks},"errs":${r.errs},"retried":${r.retried}}""")
+        println(Json.obj("command" -> "extract", "version" -> r.version, "docs" -> r.docs,
+          "chunks" -> r.chunks, "errs" -> r.errs, "retried" -> r.retried))
 
       case "dedup" :: docs :: outDir :: rest =>
         val jaccard = rest.headOption.map(_.toDouble).getOrElse(0.8)
@@ -79,35 +79,31 @@ object Main {
         r.dropped.write.mode("overwrite").parquet(s"$outDir/dropped")
         val (c, d) = (spark.read.parquet(s"$outDir/clean").count(),
           spark.read.parquet(s"$outDir/dropped").count())
-        println(s"""{"command":"dedup","clean":$c,"dropped":$d,"out":"${lake.LakeTable.esc(outDir)}"}""")
+        println(Json.obj("command" -> "dedup", "clean" -> c, "dropped" -> d, "out" -> outDir))
 
       case "index" :: chunks :: indexRoot :: Nil =>
         val df = spark.read.parquet(chunks)
         val facetCols = df.columns.toSeq.filterNot(Set("id", "text", "is_duplicate"))
         val v = jobs.IndexJob.build(spark, df, indexRoot, facetCols)
-        println(s"""{"command":"index","segment":$v,"facets":${facetCols.size}}""")
+        println(Json.obj("command" -> "index", "segment" -> v, "facets" -> facetCols.size))
 
       case "compact" :: indexRoot :: Nil =>
         val v = jobs.IndexJob.compact(spark, indexRoot)
-        println(s"""{"command":"compact","segment":$v}""")
+        println(Json.obj("command" -> "compact", "segment" -> v))
 
       case "search" :: indexRoot :: query :: rest =>
         val k = rest.headOption.map(_.toInt).getOrElse(10)
         val where = rest.lift(1)
         val hits = jobs.IndexJob.search(spark, indexRoot, query, k, where).collect()
-        // doc ids come from arbitrary user chunk tables — escape through the
-        // lake's shared JSON codec so a quote/backslash-bearing id can't
-        // corrupt the one-line-JSON contract
-        val rows = hits.map(r =>
-          s"""{"doc":"${lake.LakeTable.esc(r.getString(0))}","score":${r.getDouble(1)}}""")
-        println(s"""{"command":"search","k":$k,"hits":[${rows.mkString(",")}]}""")
+        println(Json.obj("command" -> "search", "k" -> k,
+          "hits" -> hits.toSeq.map(r => ListMap("doc" -> r.getString(0), "score" -> r.getDouble(1)))))
 
       case "ann-build" :: vecs :: indexRoot :: rest =>
         val nCells = rest.headOption.map(_.toInt).getOrElse(256)
         val dim = rest.lift(1).map(_.toInt).getOrElse(64)
         val v = jobs.AnnIndexJob.build(spark, spark.read.parquet(vecs),
           "id", "vec", indexRoot, nCells, dim)
-        println(s"""{"command":"ann-build","segment":$v}""")
+        println(Json.obj("command" -> "ann-build", "segment" -> v))
 
       case "ann-search" :: indexRoot :: queries :: rest =>
         val k = rest.headOption.map(_.toInt).getOrElse(10)
@@ -115,33 +111,31 @@ object Main {
         val dim = rest.lift(2).map(_.toInt).getOrElse(64)
         val n = jobs.AnnIndexJob.search(spark, indexRoot,
           spark.read.parquet(queries), "id", "vec", k, nProbe, dim).count()
-        println(s"""{"command":"ann-search","result_rows":$n}""")
+        println(Json.obj("command" -> "ann-search", "result_rows" -> n))
 
       case "tombstone" :: indexRoot :: ids :: Nil =>
         val df = spark.read.parquet(ids)
         val v = jobs.IndexJob.tombstone(spark, indexRoot,
           df.select(col(df.columns.head).as("doc")))
-        println(s"""{"command":"tombstone","segment":$v}""")
+        println(Json.obj("command" -> "tombstone", "segment" -> v))
 
       case "ann-compact" :: indexRoot :: Nil =>
         val v = jobs.AnnIndexJob.compact(spark, indexRoot)
-        println(s"""{"command":"ann-compact","segment":$v}""")
+        println(Json.obj("command" -> "ann-compact", "segment" -> v))
 
       case "ann-tombstone" :: indexRoot :: ids :: Nil =>
         val df = spark.read.parquet(ids)
         val v = jobs.AnnIndexJob.tombstone(spark, indexRoot,
           df.select(col(df.columns.head).as("id")))
-        println(s"""{"command":"ann-tombstone","segment":$v}""")
+        println(Json.obj("command" -> "ann-tombstone", "segment" -> v))
 
       case "audit" :: path :: idCol :: textCol :: Nil =>
         val df = spark.read.parquet(path)
         val out = audit.Contracts.run(df, Seq(
           audit.Contracts.completeness("complete_text", col(textCol), 0.95),
           audit.Contracts.uniqueness("unique_id", col(idCol), 1.0))).collect()
-        val rows = out.map(r =>
-          s"""{"chk":"${lake.LakeTable.esc(r.getString(0))}",""" +
-          s""""metric":${r.getDouble(1)},"pass":${r.getBoolean(3)}}""")
-        println(s"""{"command":"audit","checks":[${rows.mkString(",")}]}""")
+        println(Json.obj("command" -> "audit", "checks" -> out.toSeq.map(r =>
+          ListMap("chk" -> r.getString(0), "metric" -> r.getDouble(1), "pass" -> r.getBoolean(3)))))
 
       case "diff" :: oldP :: newP :: idCol :: outDir :: Nil =>
         val o = spark.read.parquet(oldP); val n = spark.read.parquet(newP)
@@ -151,10 +145,9 @@ object Main {
         d.write.mode("overwrite").parquet(outDir)
         val byOp = spark.read.parquet(outDir).groupBy("op").count().collect()
           .map(r => r.getString(0) -> r.getLong(1)).toMap
-        println(s"""{"command":"diff","insert":${byOp.getOrElse("insert", 0L)},""" +
-          s""""update":${byOp.getOrElse("update", 0L)},""" +
-          s""""delete":${byOp.getOrElse("delete", 0L)},""" +
-          s""""out":"${lake.LakeTable.esc(outDir)}"}""")
+        println(Json.obj("command" -> "diff", "insert" -> byOp.getOrElse("insert", 0L),
+          "update" -> byOp.getOrElse("update", 0L), "delete" -> byOp.getOrElse("delete", 0L),
+          "out" -> outDir))
 
       case other => throw new IllegalArgumentException(
         s"unknown command: ${other.headOption.getOrElse("")}\n$usage")

@@ -61,7 +61,7 @@ object PipelineJob {
     }
     done match {
       case Some(v) =>
-        val dropped = plake.readManifest(v).metrics.getOrElse("dropped", 0.0)
+        val dropped = plake.readManifest(v).metrics("dropped")
         Result(er.version, indexRoot, dropped.toLong, resumed = true)
       case None =>
         // phase labels (guide §1.5): thread-local, purely diagnostic — the

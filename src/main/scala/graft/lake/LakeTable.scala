@@ -1,9 +1,15 @@
 package graft.lake
 
+import com.fasterxml.jackson.databind.JsonNode
+import graft.Json
+import java.io.IOException
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.{ListMap, TreeMap}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+import LakeTable.{CkptName, ManifestName}
 
 /** Minimal Iceberg-style snapshot layer over Parquet.
   *
@@ -11,50 +17,79 @@ import scala.jdk.CollectionConverters._
   * (SURVEY.md §7.1.2), so the engine provides the three properties the
   * north rule actually depends on, from scratch:
   *
-  *  1. **Atomic visibility** — data files land under `data/`, then a
-  *     `metadata/v{N}.json` manifest is written, then `version-hint.text`
-  *     is atomically renamed into place. Readers resolve the hint; a
-  *     crashed writer leaves garbage data files but never a partial table
-  *     (the reference's tmp-write + backup-rename discipline,
-  *     src/services/RAG/progress_store.py:10-31,
-  *     convert_to_embeddings.py:586-599).
+  *  1. **One commit point** — data files land under `data/`, then the
+  *     complete `metadata/v{N}.json` manifest is *published*: written to a
+  *     temp file in `metadata/` and hard-linked (`Files.createLink`) to its
+  *     final name. A link fails if the name exists, so a manifest is
+  *     visible only when complete and can never be replaced; its existence
+  *     IS the commit (Iceberg's hadoop-catalog rule). A crashed writer
+  *     leaves garbage data/temp files but never a partial snapshot, and a
+  *     racing writer loses with `FileAlreadyExistsException` instead of
+  *     clobbering the winner. (A rename would replace on POSIX; on an
+  *     object store the link becomes a conditional put.)
   *  2. **Per-partition lineage + metrics committed with the snapshot** —
   *     the manifest embeds the lineage rows (the reference's progress
   *     ledger, progress_store.py:33-61) and metrics rows (billing ledger,
-  *     billing.py:14-72); they become visible in the same rename.
+  *     billing.py:14-72); they become visible in the same publish.
   *  3. **Checkpoint resume** — `committedKeys` is the set of work-unit keys
   *     (e.g. url-hash buckets) already in committed snapshots; planning
   *     anti-joins against it (progress_store.py:54-61 semantics).
   *
-  * Paths are local-FS in this sandbox; rename-commit is atomic on POSIX.
-  * On an object store this layer would swap the rename for a
-  * putIfAbsent/conditional-put without changing callers.
+  * **Hints are caches.** `version-hint.text` and `checkpoint-hint.text`
+  * are rewritten best-effort after each publish. A hint counts only if the
+  * file it names exists; [[currentVersion]] starts from the newer counting
+  * hint and probes `v{n+1}.json, v{n+2}.json, …` until one is missing, and
+  * lists `metadata/` only when neither hint counts. So a writer that died
+  * between publish and hint costs readers one probe, and the next commit
+  * lands after its manifest instead of colliding with it forever.
   *
   * **Checkpointed planning state** (the reference's progress-file-rewrite
   * problem, solved the Iceberg way): every `checkpointInterval` commits the
-  * table writes a consolidated `metadata/ckpt-vN.json` holding (key →
-  * version) and (file → version) for everything committed so far, plus an
-  * atomically-renamed `checkpoint-hint.text`. Readers resolve `state` from
-  * the latest checkpoint + the ≤interval manifests after it — O(interval)
-  * reads instead of O(versions) — so a 10^4-commit table plans as fast as a
-  * 10-commit one. The checkpoint is a pure cache: deleting it (or crashing
-  * between manifest and checkpoint writes) only slows readers down.
+  * table publishes a consolidated `metadata/ckpt-vN.json` holding
+  * (key → version) and (file → version) for everything committed so far.
+  * Readers resolve `state` from the latest checkpoint + the ≤interval
+  * manifests after it — O(interval) reads instead of O(versions) — so a
+  * 10^4-commit table plans as fast as a 10-commit one, and manifests at or
+  * below a checkpoint may be pruned. The checkpoint is a pure cache:
+  * deleting it (or crashing before it is written) only slows readers down.
+  *
+  * Manifests and checkpoints are JSON through [[graft.Json]]; the field
+  * names and the `"v|key"` checkpoint entries are the format tables have
+  * always been written in.
   */
 final class LakeTable(val root: String, val checkpointInterval: Int = 16) {
 
   private def metaDir: Path = Paths.get(root, "metadata")
   private def hintFile: Path = Paths.get(root, "version-hint.text")
   private def ckptHintFile: Path = Paths.get(root, "checkpoint-hint.text")
-
-  def currentVersion: Int =
-    if (Files.exists(hintFile)) new String(Files.readAllBytes(hintFile), UTF_8).trim.toInt else 0
-
-  /** Version of the newest consolidated checkpoint (0 = none). */
-  def checkpointVersion: Int =
-    if (Files.exists(ckptHintFile)) new String(Files.readAllBytes(ckptHintFile), UTF_8).trim.toInt else 0
-
   private def manifestPath(v: Int): Path = metaDir.resolve(s"v$v.json")
   private def ckptPath(v: Int): Path = metaDir.resolve(s"ckpt-v$v.json")
+
+  /** Newest committed version (0 = empty table). */
+  def currentVersion: Int = {
+    var v = (hint(hintFile, manifestPath) ++ hint(ckptHintFile, ckptPath)).maxOption
+      .getOrElse(metaNames.collect { case ManifestName(n) => n.toInt; case CkptName(n) => n.toInt }
+        .maxOption.getOrElse(0))
+    while (Files.exists(manifestPath(v + 1))) v += 1
+    v
+  }
+
+  /** Version of the newest consolidated checkpoint (0 = none). */
+  def checkpointVersion: Int = hint(ckptHintFile, ckptPath).getOrElse(0)
+
+  /** The version a hint file holds, if it parses and the file it names
+    * exists (a hint naming deleted metadata never counts). */
+  private def hint(file: Path, named: Int => Path): Option[Int] =
+    try Some(new String(Files.readAllBytes(file), UTF_8).trim.toInt).filter(v => Files.exists(named(v)))
+    catch { case _: IOException | _: NumberFormatException => None }
+
+  private def metaNames: Seq[String] =
+    if (!Files.isDirectory(metaDir)) Nil
+    else {
+      val stream = Files.list(metaDir)
+      try stream.iterator().asScala.map(_.getFileName.toString).toList
+      finally stream.close()
+    }
 
   /** Consolidated table state: every committed key and data file, each
     * tagged with the version that committed it (later commits of the same
@@ -91,22 +126,7 @@ final class LakeTable(val root: String, val checkpointInterval: Int = 16) {
   private def latestCheckpointAtOrBefore(v: Int): Int = {
     val hinted = checkpointVersion
     if (hinted >= 1 && hinted <= v) hinted
-    else if (!Files.isDirectory(metaDir)) 0
-    else {
-      val ckptRe = "ckpt-v(\\d+)\\.json".r
-      val stream = Files.list(metaDir)
-      try {
-        val it = stream.iterator()
-        var best = 0
-        while (it.hasNext) {
-          it.next().getFileName.toString match {
-            case ckptRe(n) if n.toInt <= v => best = math.max(best, n.toInt)
-            case _ =>
-          }
-        }
-        best
-      } finally stream.close()
-    }
+    else metaNames.collect { case CkptName(n) if n.toInt <= v => n.toInt }.maxOption.getOrElse(0)
   }
 
   /** All data files across committed snapshots (append-table semantics). */
@@ -120,55 +140,62 @@ final class LakeTable(val root: String, val checkpointInterval: Int = 16) {
 
   /** Commit one snapshot: the parquet files under `dataSubdir` (already
     * written by the caller via df.write), the work-unit keys they cover,
-    * lineage rows, and metrics. Atomic via temp-write + ATOMIC_MOVE. */
+    * lineage rows, and metrics. The publish of the manifest is the commit;
+    * a racing committer of the same version fails with
+    * `FileAlreadyExistsException` (single-writer is the design, as in the
+    * reference's driver loop). Metrics must be finite: JSON has no NaN or
+    * Infinity, and a metric that cannot be read back must not commit. */
   def commit(files: Seq[String], keys: Seq[String],
              lineage: Seq[Map[String, String]], metrics: Map[String, Double]): Int = {
-    Files.createDirectories(metaDir)
+    metrics.foreach { case (k, x) =>
+      require(x.isFinite, s"metric '$k' is $x; a manifest holds only finite numbers") }
     val v = currentVersion + 1
-    val json = manifestJson(Manifest(v, v - 1, files, keys, lineage, metrics))
-    // CREATE_NEW: optimistic concurrency — a racing committer loses with an
-    // explicit FileAlreadyExistsException instead of silently clobbering
-    // (single-writer is the design, as in the reference's driver loop; this
-    // guard turns a violated assumption into a loud failure)
-    Files.write(manifestPath(v), json.getBytes(UTF_8),
-      java.nio.file.StandardOpenOption.CREATE_NEW, java.nio.file.StandardOpenOption.WRITE)
-    val tmp = metaDir.resolve(s".hint.$v.tmp")
-    Files.write(tmp, v.toString.getBytes(UTF_8))
-    Files.move(tmp, hintFile, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    // best-effort: the checkpoint is a pure cache (deleting it only slows
-    // readers down), and the commit above is already durably published —
-    // a stale ckpt file or transient IO error must not surface as a commit
-    // failure. Readers fall back to walking manifests.
-    try maybeCheckpoint(v) catch { case _: java.io.IOException => () }
+    publish(manifestPath(v), Json.mapper.writeValueAsBytes(ListMap(
+      "version" -> v, "parent" -> (v - 1), "files" -> files, "keys" -> keys,
+      "lineage" -> lineage.map(row => TreeMap(row.toSeq: _*)),
+      "metrics" -> TreeMap(metrics.toSeq: _*))))
+    cacheHint(hintFile, v)
+    // best-effort: the checkpoint is a pure cache and the commit above is
+    // already published — a transient IO error must not surface as a
+    // commit failure. Readers fall back to walking manifests.
+    try maybeCheckpoint(v) catch { case _: IOException => () }
     v
   }
 
-  /** Write a consolidated checkpoint when `checkpointInterval` commits have
-    * accumulated since the last one. Computing the state here reads at most
-    * `interval` manifests (previous checkpoint + tail), keeping commit cost
-    * amortized O(1) per version. */
-  private def maybeCheckpoint(v: Int): Unit = {
+  /** Publish a consolidated checkpoint when `checkpointInterval` commits
+    * have accumulated since the last one. Computing the state here reads at
+    * most `interval` manifests (previous checkpoint + tail), keeping commit
+    * cost amortized O(1) per version. */
+  private def maybeCheckpoint(v: Int): Unit =
     if (checkpointInterval > 0 && v - checkpointVersion >= checkpointInterval) {
-      val st = state
-      val kv = st.keyVersions.map { case (k, kvv) => s""""${esc(s"$kvv|$k")}"""" }.mkString("[", ",", "]")
-      val fvs = st.fileVersions.map { case (f, fvv) => s""""${esc(s"$fvv|$f")}"""" }.mkString("[", ",", "]")
-      Files.write(ckptPath(v),
-        s"""{"version":$v,"key_versions":$kv,"file_versions":$fvs}""".getBytes(UTF_8),
-        java.nio.file.StandardOpenOption.CREATE_NEW, java.nio.file.StandardOpenOption.WRITE)
-      val tmp = metaDir.resolve(s".ckpt-hint.$v.tmp")
-      Files.write(tmp, v.toString.getBytes(UTF_8))
-      Files.move(tmp, ckptHintFile, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      val st = stateAt(v)
+      publish(ckptPath(v), Json.mapper.writeValueAsBytes(ListMap("version" -> v,
+        "key_versions" -> st.keyVersions.map { case (k, kv) => s"$kv|$k" },
+        "file_versions" -> st.fileVersions.map { case (f, fv) => s"$fv|$f" })))
+      cacheHint(ckptHintFile, v)
     }
-  }
 
-  private def readCheckpoint(v: Int): State = {
-    val json = new String(Files.readAllBytes(ckptPath(v)), UTF_8)
-    def versioned(field: String): Seq[(String, Int)] =
-      strArrayIn(json, field).map { s =>
-        val cut = s.indexOf('|')
-        (s.substring(cut + 1), s.substring(0, cut).toInt)
-      }
-    State(versioned("key_versions"), versioned("file_versions"))
+  /** Make `bytes` visible at `path` whole or not at all, never replacing
+    * an existing file: temp write, then a hard link, which fails with
+    * `FileAlreadyExistsException` if the name exists. Temp names never
+    * match `v\d+\.json`, so a stray one is never read as a manifest. */
+  private[graft] def publish(path: Path, bytes: Array[Byte]): Unit =
+    viaTemp(bytes)(Files.createLink(path, _))
+
+  /** Rewrite a hint; readers verify and probe past it, so failing here
+    * only costs them a probe or a listing. */
+  private def cacheHint(file: Path, v: Int): Unit =
+    try viaTemp(v.toString.getBytes(UTF_8))(
+      Files.move(_, file, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING))
+    catch { case _: IOException => () }
+
+  /** Write `bytes` to a fresh temp file in `metadata/`, hand it to `place`,
+    * and remove whatever of it is left. */
+  private def viaTemp(bytes: Array[Byte])(place: Path => Unit): Unit = {
+    Files.createDirectories(metaDir)
+    val tmp = Files.createTempFile(metaDir, ".", ".tmp")
+    try { Files.write(tmp, bytes); place(tmp) }
+    finally Files.deleteIfExists(tmp)
   }
 
   def read(spark: SparkSession): DataFrame = {
@@ -184,80 +211,48 @@ final class LakeTable(val root: String, val checkpointInterval: Int = 16) {
     else spark.read.parquet(files: _*)
   }
 
-  // ------------------------------------------------------------ JSON codec
-  // Hand-rolled (no JSON lib beyond Spark's internals is guaranteed):
-  // flat structure, strings escaped.
-
-  private def esc(s: String): String = LakeTable.esc(s)
-
-  private def manifestJson(m: Manifest): String = {
-    val files = m.files.map(f => s""""${esc(f)}"""").mkString("[", ",", "]")
-    val keys = m.keys.map(k => s""""${esc(k)}"""").mkString("[", ",", "]")
-    val lineage = m.lineage.map { row =>
-      row.toSeq.sortBy(_._1).map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }.mkString("{", ",", "}")
-    }.mkString("[", ",", "]")
-    val metrics = m.metrics.toSeq.sortBy(_._1).map { case (k, v) => s""""${esc(k)}":$v""" }.mkString("{", ",", "}")
-    s"""{"version":${m.version},"parent":${m.parent},"files":$files,"keys":$keys,"lineage":$lineage,"metrics":$metrics}"""
+  /** Manifest of snapshot `v`; fails naming the file if it is not valid
+    * JSON or a field is missing or mistyped (a metric that cannot be read
+    * never reads as 0). */
+  def readManifest(v: Int): Manifest = parsed(manifestPath(v)) { j =>
+    Manifest(int(j, "version"), int(j, "parent"), strings(j, "files"), strings(j, "keys"),
+      elements(j, "lineage", _.isObject).map(row => fields(row).map { case (k, x) =>
+        k -> expect(x, _.isTextual, s"lineage '$k' is not a string").textValue }),
+      fields(expect(j.get("metrics"), _.isObject, "no 'metrics' object")).map { case (k, x) =>
+        k -> expect(x, _.isNumber, s"metric '$k' is not a number").doubleValue })
   }
 
-  /** Quoted-string array field parser shared by manifest and checkpoint
-    * files (the lazy `]` terminator is safe: esc() escapes brackets inside
-    * string content). */
-  private def strArrayIn(json: String, field: String): Seq[String] = {
-    val r = ("\"" + field + "\":\\[(.*?)\\]").r
-    r.findFirstMatchIn(json).map(_.group(1)) match {
-      case Some("") | None => Nil
-      case Some(body) =>
-        "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(body).map(m => unesc(m.group(1))).toSeq
-    }
-  }
-
-  def readManifest(v: Int): Manifest = {
-    val json = new String(Files.readAllBytes(manifestPath(v)), UTF_8)
-    def strArray(field: String): Seq[String] = strArrayIn(json, field)
-    val lineage: Seq[Map[String, String]] = {
-      val r = "\"lineage\":\\[(.*?)\\](?=,\"metrics\")".r
-      r.findFirstMatchIn(json).map(_.group(1)) match {
-        case Some(body) if body.nonEmpty =>
-          "\\{(.*?)\\}".r.findAllMatchIn(body).map { m =>
-            "\"((?:[^\"\\\\]|\\\\.)*)\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-              .findAllMatchIn(m.group(1))
-              .map(kv => unesc(kv.group(1)) -> unesc(kv.group(2))).toMap
-          }.toSeq
-        case _ => Nil
+  private def readCheckpoint(v: Int): State = parsed(ckptPath(v)) { j =>
+    def versioned(field: String): Seq[(String, Int)] =
+      strings(j, field).map { s =>
+        val cut = s.indexOf('|')
+        (s.substring(cut + 1), s.substring(0, cut).toInt)
       }
-    }
-    val metrics: Map[String, Double] = {
-      val r = "\"metrics\":\\{(.*?)\\}".r
-      r.findFirstMatchIn(json).map(_.group(1)) match {
-        case Some(body) if body.nonEmpty =>
-          "\"((?:[^\"\\\\]|\\\\.)*)\":([-0-9.eE]+)".r.findAllMatchIn(body)
-            .map(m => unesc(m.group(1)) -> m.group(2).toDouble).toMap
-        case _ => Map.empty
-      }
-    }
-    val ver = "\"version\":(\\d+)".r.findFirstMatchIn(json).map(_.group(1).toInt).getOrElse(v)
-    val par = "\"parent\":(\\d+)".r.findFirstMatchIn(json).map(_.group(1).toInt).getOrElse(v - 1)
-    Manifest(ver, par, strArray("files"), strArray("keys"), lineage, metrics)
+    State(versioned("key_versions"), versioned("file_versions"))
   }
 
-  private def unesc(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'n' => sb.append('\n'); i += 2
-          case 'r' => sb.append('\r'); i += 2
-          case 't' => sb.append('\t'); i += 2
-          case 'u' => sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-          case other => sb.append(other); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
+  /** Parse one metadata file; any fault in its content fails naming it. */
+  private def parsed[T](path: Path)(build: JsonNode => T): T = {
+    val bytes = Files.readAllBytes(path)
+    try build(Json.mapper.readTree(bytes))
+    catch { case NonFatal(e) => throw new IOException(s"unreadable lake metadata $path: ${e.getMessage}", e) }
   }
+
+  private def expect(node: JsonNode, ok: JsonNode => Boolean, what: => String): JsonNode =
+    if (node != null && ok(node)) node else throw new IllegalArgumentException(what)
+
+  private def int(j: JsonNode, field: String): Int =
+    expect(j.get(field), _.canConvertToExactIntegral, s"no integer '$field'").intValue
+
+  private def elements(j: JsonNode, field: String, ok: JsonNode => Boolean): Seq[JsonNode] =
+    expect(j.get(field), _.isArray, s"no '$field' array").asScala.toSeq
+      .map(expect(_, ok, s"unexpected element in '$field'"))
+
+  private def strings(j: JsonNode, field: String): Seq[String] =
+    elements(j, field, _.isTextual).map(_.textValue)
+
+  private def fields(j: JsonNode): Map[String, JsonNode] =
+    j.properties().asScala.map(e => e.getKey -> e.getValue).toMap
 
   /** List parquet part-files under a directory (helper for callers that
     * just wrote with df.write.parquet). */
@@ -277,21 +272,7 @@ final class LakeTable(val root: String, val checkpointInterval: Int = 16) {
   }
 }
 
-/** Engine-wide JSON string escaper — ONE codec for every hand-built JSON
-  * surface (manifests, checkpoints, the CLI's one-line results), so a doc
-  * id or path containing quotes/backslashes/control chars can never emit
-  * corrupt JSON anywhere. Brackets/braces also escape (as `[` etc.,
-  * still-valid JSON) because the manifest reader's lazy field terminators
-  * require an injective codec. */
 object LakeTable {
-  private[graft] def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c @ ('[' | ']' | '{' | '}') => f"\\u${c.toInt}%04x"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
+  private val ManifestName = "v(\\d+)\\.json".r
+  private val CkptName = "ckpt-v(\\d+)\\.json".r
 }

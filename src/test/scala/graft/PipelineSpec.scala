@@ -154,4 +154,45 @@ class PipelineSpec extends SparkSuiteBase {
       facetWhere = Some("host = 'nowhere.example'")).collect()
     assert(offHost.isEmpty)
   }
+
+  test("PipelineJob: a crash before any commit resumes to the uninterrupted result") {
+    import java.nio.file.Paths
+    import graft.jobs.{ExtractJob, PipelineJob}
+    import graft.lake.LakeTable
+    // the first 96 seeded pages plant exact and near duplicates; pages 165
+    // and 224 carry the Newton passage
+    val pages = ((0L until 96L) ++ Seq(165L, 224L)).toDS().map(i => PageGen.row(42L, i))
+    def run(root: String) = PipelineJob.run(spark, pages, root, nBuckets = 4)
+    def outcome(root: String, r: PipelineJob.Result) = {
+      val dlake = new LakeTable(s"$root/dedup")
+      (ExtractJob.readChunks(spark, s"$root/extract").orderBy("url", "chunk_index").collect().toSeq,
+        spark.read.parquet(dlake.readManifest(dlake.currentVersion).files: _*)
+          .collect().toSeq.sortBy(_.toString),
+        r.dedupDropped,
+        IndexJob.liveDocs(spark, s"$root/index").orderBy("doc").collect().toSeq,
+        IndexJob.search(spark, s"$root/index", "newton raphson method", 10).collect()
+          .map(h => (h.getString(0), h.getDouble(1))).toSeq)
+    }
+    val cleanRoot = Files.createTempDirectory("graft-pcrash-clean").toString
+    val expected = outcome(cleanRoot, run(cleanRoot))
+    assert(expected._2.nonEmpty && expected._5.nonEmpty)
+
+    // a fresh run commits one snapshot per table, in this order: the
+    // whole commit sequence of PipelineJob.run
+    val sequence = Seq("extract", "dedup", "index", "pipeline")
+    assert(sequence.map(t => new LakeTable(s"$cleanRoot/$t").currentVersion) == Seq(1, 1, 1, 1))
+    for (k <- sequence.indices) {
+      // the manifest's existence is the commit point, so "crashed just
+      // before commit k" is a finished root whose manifests from k on are
+      // back in the temp files they were published from — data files and
+      // (now stale) hints stay as the crashed writer left them
+      val root = Files.createTempDirectory("graft-pcrash").toString
+      run(root)
+      sequence.drop(k).foreach { t =>
+        val meta = Paths.get(root, t, "metadata")
+        Files.move(meta.resolve("v1.json"), meta.resolve(".crashed.tmp"))
+      }
+      assert(outcome(root, run(root)) == expected, s"crash before the ${sequence(k)} commit")
+    }
+  }
 }
